@@ -29,6 +29,8 @@ IEEE-identical cross-engine.
 
 from __future__ import annotations
 
+import math
+
 import numpy as np
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
@@ -81,6 +83,18 @@ def chi2_fold_scores(
     )
 
 
+def _spark_desc_key(t: tuple) -> tuple:
+    """Sort key for (feature, score, is_null) matching Spark's
+    ``desc(score), asc(feature)``: NaN ranks above every number, NULL
+    last. (toPandas turns NULL into NaN, hence the separate flag.)"""
+    x, s, null = t
+    if null:
+        return (2, 0.0, x)
+    if math.isnan(s):
+        return (0, 0.0, x)
+    return (1, -s, x)
+
+
 def _stability_topk_driver(
     scores: DataFrame,
     k: int,
@@ -97,15 +111,16 @@ def _stability_topk_driver(
         F.col(fold_col).alias("f"),
         F.col(feature_col).alias("x"),
         F.col(score_col).cast("double").alias("s"),
+        F.col(score_col).isNull().alias("null"),
     ).toPandas()
     p_cnt = pdf["x"].nunique()
     sets: dict = {}
     for f, grp in pdf.groupby("f", sort=True):
         ordered = sorted(
-            zip(grp["x"].tolist(), grp["s"].tolist()),
-            key=lambda t: (-t[1], t[0]),
+            zip(grp["x"].tolist(), grp["s"].tolist(), grp["null"].tolist()),
+            key=_spark_desc_key,
         )
-        sets[f] = {x for x, _ in ordered[:k]}
+        sets[f] = {x for x, _, _ in ordered[:k]}
     fold_vals = sorted(sets)
     rows = []
     for i, a in enumerate(fold_vals):

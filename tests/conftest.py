@@ -10,3 +10,7 @@ def spark():
     s = get_spark(app_name="fastselect-tests", master="local[4]", shuffle_partitions=8)
     yield s
     s.stop()
+
+
+def pytest_configure(config):
+    config.addinivalue_line("markers", "slow: long-running property test")

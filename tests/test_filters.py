@@ -380,6 +380,40 @@ def test_stability_driver_path_matches_distributed(spark, monkeypatch):
     assert fast.equals(slow)
 
 
+def test_stability_driver_path_orders_nan_like_spark(spark, monkeypatch):
+    """Spark's ``desc(score)`` ranks NaN above every number and NULL last;
+    the driver replica must pick the same top-k sets. Folds 10-14 each hold
+    one feature, so n_common against them spells out fold 0's set."""
+    import fastselect_spark.selection._agg as aggmod
+    import fastselect_spark.selection.stability as stab
+    from fastselect_spark.selection import stability_topk
+
+    feats = ["a", "b", "c", "d", "e"]
+    # row order matters to a NaN-unaware sort: this one made it keep {b, c}
+    rows = [(0, "b", 3.0), (0, "c", 2.0), (0, "a", float("nan")), (0, "d", 1.0), (0, "e", None)]
+    rows += [(10 + i, x, 1.0) for i, x in enumerate(feats)]
+    df = spark.createDataFrame(rows, "fold int, feature string, score double")
+
+    def run(driver: bool):
+        ran = []
+        real = stab._stability_topk_driver
+        monkeypatch.setattr(aggmod, "small_frame", lambda *_a, **_k: driver)
+        monkeypatch.setattr(
+            stab, "_stability_topk_driver", lambda *a, **kw: ran.append(1) or real(*a, **kw)
+        )
+        out = stability_topk(df, k=2).toPandas()
+        monkeypatch.undo()
+        assert bool(ran) == driver
+        out = out.sort_values(["fold_a", "fold_b"]).reset_index(drop=True)
+        first = out[out.fold_a == 0].set_index("fold_b")["n_common"]
+        return {x for i, x in enumerate(feats) if first[10 + i] == 1}, out
+
+    driver_set, driver_out = run(True)
+    dist_set, dist_out = run(False)
+    assert driver_set == dist_set == {"a", "b"}
+    assert driver_out.equals(dist_out)
+
+
 def test_stability_short_fold_uses_actual_sizes(spark):
     """When a fold's score table holds fewer than k features, overlap
     metrics must use the ACTUAL set sizes (|A|+|B|−r Jaccard denominator,
